@@ -332,11 +332,10 @@ def k_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b")
         .repartition(64, F.col("doc_a"))
     )
-    # Exact verify via the shared scorer (optimization r14): same joins and
-    # gated hints as the old inline form, but the intersection runs behind
-    # the §4.4 eval_once barrier (exactly once per candidate) and the union
-    # size is the |a|+|b|-|a∩b| arithmetic (tset is array_distinct output,
-    # so the ratios — and therefore the >= 0.6 edge set — are identical).
+    # Exact verify via the shared scorer: same joins and gated hints as
+    # the old inline form, with the union size as |a|+|b|-|a∩b| (tset is
+    # array_distinct output, so the ratios — and therefore the >= 0.6 edge
+    # set — are identical).
     from .dedup import exact_jaccard_scores
 
     pairs = exact_jaccard_scores(
@@ -480,10 +479,9 @@ def k_corpus_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = surv.select(
         "doc_id", "lang", F.array_distinct(F.split("text", " ")).alias("tset")
     )
-    # shared exact scorer (optimization r14): same equi-joins, plus the
-    # size-gated broadcast hint, the |a|+|b|-|a∩b| union arithmetic and
-    # the §4.4 eval_once barrier the other verify stages already carry
-    # (tset is array_distinct output, so the ratios are identical)
+    # shared exact scorer: same equi-joins, plus the size-gated broadcast
+    # hint and the |a|+|b|-|a∩b| union arithmetic (tset is array_distinct
+    # output, so the ratios are identical)
     from .dedup import exact_jaccard_scores
 
     pairs = exact_jaccard_scores(
@@ -1072,22 +1070,13 @@ def k_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                           F.col("t").alias("tb"),
                           F.size("t").alias("_nb")))
     # |a ∪ b| as |a|+|b|-|a∩b| (t is array_distinct output — exact), with
-    # the sizes computed once per doc on the tiny fetch sides, and the
-    # intersection behind the §4.4 eval_once barrier so the threshold
-    # predicate (which names it twice: numerator and denominator) costs
-    # ONE array-hash-set build per candidate, not two (optimization r14,
-    # same shape as exact_jaccard_scores).
-    from ..plans.hints import eval_once
-
+    # the sizes computed once per doc on the tiny fetch sides (same shape
+    # as exact_jaccard_scores).
     inter = F.size(F.array_intersect("ta", "tb"))
-    scored = cross.join(a, "new_id").join(b, "old_id").select(
-        "new_id", "_na", "_nb", eval_once(inter).alias("_inter")
-    )
-    jac = F.col("_inter").cast("double") / (
-        F.col("_na") + F.col("_nb") - F.col("_inter")
-    )
+    jac = inter.cast("double") / (F.col("_na") + F.col("_nb") - inter)
     near_dup = (
-        scored.where(jac >= 0.6)
+        cross.join(a, "new_id").join(b, "old_id")
+        .where(jac >= 0.6)
         .select(F.col("new_id").alias("doc_id"))
         .distinct()
     )
@@ -1250,9 +1239,9 @@ def k_corpus_build_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     tsets = surv.select(
         "doc_id", "lang", F.array_distinct(F.split("text", " ")).alias("tset")
     )
-    # shared exact scorer (optimization r14): identical joins and gated
-    # hint, plus the union arithmetic + §4.4 barrier — see
-    # k_corpus_dedup_pipeline's note; tset is array_distinct output
+    # shared exact scorer: identical joins and gated hint, plus the union
+    # arithmetic — see k_corpus_dedup_pipeline's note; tset is
+    # array_distinct output
     from .dedup import exact_jaccard_scores
 
     pairs = exact_jaccard_scores(
@@ -1655,32 +1644,19 @@ def k_corpus_dedup_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("tset").alias("_nb"),
         F.size("sset").alias("_nsb"),
     ))
-    # Both set intersections behind the §4.4 eval_once barrier, sizes from
-    # the per-doc fetch sides, |a ∪ b| as |a|+|b|-|a∩b| (tset/sset are
-    # array_distinct output — exact): the OR-of-thresholds predicate then
-    # compares integer arithmetic, paying exactly one token-intersect and
-    # one shingle-intersect per candidate instead of token-intersect +
-    # token-union + shingle-intersect (optimization r14).
-    from ..plans.hints import eval_once
-
+    # Sizes from the per-doc fetch sides and |a ∪ b| as |a|+|b|-|a∩b|
+    # (tset/sset are array_distinct output — exact): the OR-of-thresholds
+    # predicate needs a token-intersect and a shingle-intersect per
+    # candidate, and no token-union.
     jint = F.size(F.array_intersect("ta", "tb"))
     cint = F.size(F.array_intersect("sa", "sb"))
-    scored = (
+    jac = jint.cast("double") / (F.col("_na") + F.col("_nb") - jint)
+    cont = cint.cast("double") / F.least("_nsa", "_nsb")
+    pairs = (
         cand.join(a, "doc_a")
         .join(b, "doc_b")
         .where(F.col("lang_a") == F.col("lang_b"))
-        .select(
-            "doc_a", "doc_b", "_na", "_nb", "_nsa", "_nsb",
-            eval_once(jint).alias("_jint"),
-            eval_once(cint).alias("_cint"),
-        )
-    )
-    jac = F.col("_jint").cast("double") / (
-        F.col("_na") + F.col("_nb") - F.col("_jint")
-    )
-    cont = F.col("_cint").cast("double") / F.least("_nsa", "_nsb")
-    pairs = (
-        scored.where((jac >= 0.6) | (cont >= 0.5))
+        .where((jac >= 0.6) | (cont >= 0.5))
         .select("doc_a", "doc_b")
     )
     edges = (

@@ -77,3 +77,30 @@ def has_partition_filters(df: DataFrame) -> bool:
             if m and m.group(1).strip():
                 return True
     return False
+
+
+def shuffle_handles(df: DataFrame) -> list[tuple[int, str]]:
+    """(reduce partitions, shuffle handle class) for every shuffle exchange
+    in the physical plan, in pre-order. The handle names the map-side
+    writer Spark's SortShuffleManager chose: ``SerializedShuffleHandle``
+    (UnsafeShuffleWriter), ``BypassMergeSortShuffleHandle`` or
+    ``BaseShuffleHandle`` (SortShuffleWriter). Driver-side only: building
+    the dependency registers the shuffle but runs no job."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        # the current physical plan: before execution, the initial plan
+        # with the exchanges EnsureRequirements inserted
+        plan = plan.executedPlan()
+    found: list[tuple[int, str]] = []
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName() == "ShuffleExchangeExec":
+            dep = node.shuffleDependency()
+            found.append((
+                dep.partitioner().numPartitions(),
+                dep.shuffleHandle().getClass().getSimpleName(),
+            ))
+        children = node.children()
+        stack.extend(children.apply(i) for i in reversed(range(children.size())))
+    return found

@@ -15,6 +15,21 @@ expressed as their Spark equivalents (SURVEY.md §4 table). Config choices:
 * dynamic partition overwrite: the Spark equivalent of Hive
   ``INSERT OVERWRITE ... PARTITION`` the reference used for idempotent
   daily reloads.
+* serialized shuffle writer (``bypassMergeThreshold=0``): with 32 SQL
+  partitions, and 64 for the explicit repartitions, every exchange is
+  under Spark's default bypass threshold of 200 and has no map-side
+  combine, so ``SortShuffleManager`` would pick
+  ``BypassMergeSortShuffleWriter``. That writer opens one temp file per
+  reduce partition in each map task, then copies them all into the
+  final ``shuffle_*.data`` file, so each shuffle byte hits disk twice.
+  ``UnsafeShuffleWriter`` instead sorts record pointers by partition id
+  in memory and moves its single spill into place: one write. The radix
+  sort on partition id is stable, so shuffle contents and per-partition
+  record order are unchanged.
+* driver heap sized to the host: 40% of the memory this process may use
+  (MemTotal, or a lower cgroup limit). A heap far above physical memory
+  lets the JVM grow until the kernel kills it; callers that want another
+  size pass ``spark.driver.memory`` in ``extra_conf``.
 """
 
 from __future__ import annotations
@@ -24,6 +39,34 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+
+_CGROUP_LIMITS = (
+    "/sys/fs/cgroup/memory.max",  # cgroup v2
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # cgroup v1
+)
+
+
+def host_memory_bytes() -> int:
+    """Memory this process may use: MemTotal, or a lower cgroup limit."""
+    with open("/proc/meminfo") as f:
+        limit = next(
+            int(line.split()[1]) * 1024 for line in f if line.startswith("MemTotal:")
+        )
+    for path in _CGROUP_LIMITS:
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            limit = min(limit, int(raw))
+    return limit
+
+
+def driver_heap() -> str:
+    """The default ``spark.driver.memory``: 40% of ``host_memory_bytes()``,
+    at least 1 GB, in MB."""
+    return f"{max(1024, int(host_memory_bytes() * 0.4) >> 20)}m"
 
 
 def get_spark(
@@ -77,7 +120,8 @@ def get_spark(
         # rejects; read it as long and convert in io.load (ns -> us).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", "64g")
+        .config("spark.driver.memory", driver_heap())
+        .config("spark.shuffle.sort.bypassMergeThreshold", "0")
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -70,6 +70,22 @@ def test_single_shuffle_aggregations(spark):
     assert "partial_max" in plan, plan
 
 
+def test_shuffles_use_serialized_writer(spark):
+    """Every engine shuffle takes the serialized writer, which writes each
+    map output once; the bypass-merge writer Spark picks by default below
+    200 partitions writes it twice (per-partition temp files, then a copy
+    into the final data file). Covers a 32-partition SQL aggregate
+    exchange and a 64-way explicit repartition."""
+    from opay_datalake_script_spark.plans.inspect import shuffle_handles
+    from opay_datalake_script_spark.sources.io import load
+
+    agg = QUERIES["d_agg_basic"](spark, SF_DIR)
+    assert shuffle_handles(agg) == [(32, "SerializedShuffleHandle")]
+    assert len(agg.collect()) > 0, "probing the handles must not break execution"
+    rep = load(spark, SF_DIR, "documents").repartition(64, "doc_id")
+    assert shuffle_handles(rep) == [(64, "SerializedShuffleHandle")]
+
+
 def test_salted_join_spreads_key(spark):
     """The salted join's shuffle keys must include the salt column —
     that's the whole point (one hot key -> N reducers)."""
