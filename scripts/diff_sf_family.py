@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Generic one-off sf-differential for a named family of registry IDs
-(generalizes scripts/diff_sf01_banding.py — VERDICT r12 item 3 wants
+(VERDICT r12 item 3 wants
 the deterministic-ML family run at sf0.1, and future rounds will want
 other families). Runs each ID's Spark query vs its DuckDB oracle at the
 given fixture dir with the same comparator pytest uses (driver-parity
@@ -10,6 +10,10 @@ Usage: python scripts/diff_sf_family.py [--sf SF_DIR] ID [ID ...]
        python scripts/diff_sf_family.py --family ml   # built-in lists
 
 Built-in families:
+  banding the r11 banding-conversion wave (capped_bucket_pairs) plus the
+          two-source corpus pipeline on the same helper; sf0.1's
+          3921-wide bucket is the one fixture that exercises the
+          star+chunked-chain path above the chunk/cap knobs
   ml      the r11 deterministic-ML conversions (Lloyd fit et al.) —
           never previously run against DuckDB at sf0.1's 2,000x64-d
           embeddings (verified at sf0.01/sf0.001 only)
@@ -35,6 +39,20 @@ from opay_datalake_script_spark.registry import (  # noqa: E402
 from opay_datalake_script_spark.schemas import TABLES  # noqa: E402
 
 FAMILIES = {
+    "banding": [
+        "k_jaccard_pairs",
+        "k_near_dedup_lsh",
+        "k_lsh_band_candidates",
+        "k_ngram_jaccard",
+        "k_containment_dedup",
+        "k_minhash_jaccard_estimate",
+        "k_edit_distance_pairs",
+        "k_winnow_candidates",
+        "k_image_ahash_dedup",
+        "k_incremental_dedup",
+        "k_corpus_build_pipeline",
+        "k_corpus_dedup_winnow",
+    ],
     "ml": [
         "k_kmeans_clusters",
         "k_semdedup",
